@@ -6,8 +6,12 @@
 
 .PHONY: test bench package oracle plans clean
 
+# perfbench/tests runs in its own session (its conftest starts a
+# differently-configured Spark) and pins the fault-plan violations the
+# validation assembly must keep.
 test:
 	python -m pytest tests/ -x -q
+	python -m pytest perfbench/tests -x -q
 
 bench:
 	python bench.py

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mds_provider_spark import rules as R
 from mds_provider_spark import schema as S
+from mds_provider_spark.api import assemble_violations
 from mds_provider_spark.operators import dedup as D
 from mds_provider_spark.operators import drift as DR
 from mds_provider_spark.operators import consistency as CS
@@ -116,24 +117,22 @@ def _lineitem_ruleset() -> R.RuleSet:
         R.is_in("l_linestatus", ["O", "F"]),
         R.in_range("l_quantity", lo=0.0, lo_inclusive=False, hi=50.0),
         R.in_range("l_discount", lo=0.0, hi=0.1),
+        R.unique_key(["l_orderkey", "l_linenumber"]),
     )
     return rs
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full validation over sf0.001 lineitem/orders — row rules
-    in one projection + salted duplicate-PK detection + referential
-    anti-join, unioned into canonical violation rows."""
+    """Flagship: full validation over sf0.001 lineitem/orders — the
+    ruleset's row rules and declared (l_orderkey, l_linenumber) key via
+    assemble_violations, plus a referential anti-join against orders,
+    unioned into canonical violation rows."""
     li = _t(spark, SF0001, "lineitem").select(
         "*",
         F.concat_ws("|", F.col("l_orderkey"), F.col("l_linenumber")).alias("li_key"),
         F.pmod(F.col("l_orderkey"), F.lit(16)).cast("int").alias("part_id"),
     )
     orders = _t(spark, SF0001, "orders")
-    rs = _lineitem_ruleset()
-    row_v = rs.violations(li)
-    dup_v = U.duplicate_violations(li, ["l_orderkey", "l_linenumber"],
-                                   key_col="li_key", part_col="part_id")
     orphan = REF.orphans(
         li.select("li_key", "part_id", "l_orderkey"),
         orders.select(F.col("o_orderkey").alias("l_orderkey")),
@@ -145,7 +144,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.lit("lineitem row has no order").alias("message"),
         F.col("part_id").alias("part_id"),
     )
-    return row_v.unionByName(dup_v).unionByName(orphan)
+    return assemble_violations(_lineitem_ruleset(), li).unionByName(orphan)
 
 
 # ---------------------------------------------------------------- queries
@@ -992,12 +991,8 @@ def clips_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.createDataFrame(pcm_rows, "clip_id string, part_id int").coalesce(
         1
     ).write.mode("overwrite").parquet(f"{_ORACLE_DIR}/pcm_fault_ledger")
-    rs = R.mds_clip_rules()
-    v = rs.violations(clips)
-    v = v.unionByName(U.duplicate_violations(clips, ["clip_id"]))
-    v = v.unionByName(REF.referential_violations(clips, ts))
-    v = v.unionByName(REF.transcript_mismatch_violations(clips, ts))
-    v = v.unionByName(audio.pcm_violations(clips, FX.ref_waveform))
+    v = assemble_violations(R.mds_clip_rules(), clips, ts,
+                            pcm=audio.pcm_violations(clips, FX.ref_waveform))
     return v.select("rule_id", "clip_id", "column_name", "part_id")
 
 

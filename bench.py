@@ -93,9 +93,8 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
     JIT + python-worker spawn, which a long-lived cluster amortizes.
     """
     from mds_provider_spark import rules as R
+    from mds_provider_spark.api import assemble_violations
     from mds_provider_spark.functions import audio
-    from mds_provider_spark.operators import referential as REF
-    from mds_provider_spark.operators import uniqueness as U
     from mds_provider_spark.sources import fixtures as FX
 
     spark = _spark(parallelism)
@@ -105,13 +104,11 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
         rs = R.mds_clip_rules()
 
         def rules_only():
-            """JVM-only path (no Python stage): rule projection + salted
-            uniqueness + referential joins — isolates codegen scaling."""
+            """JVM-only path (no Python stage): the assembled validation
+            without PCM — rule projection, uniqueness, referential and
+            transcript-equality joins — isolates codegen scaling."""
             t0 = time.monotonic()
-            v = rs.violations(clips)
-            v = v.unionByName(U.duplicate_violations(clips, ["clip_id"]))
-            v = v.unionByName(REF.referential_violations(clips, ts))
-            v.count()
+            assemble_violations(rs, clips, ts).count()
             return time.monotonic() - t0
 
         def once():
@@ -121,11 +118,7 @@ def validate_clips(parallelism: int, repeats: int = 3) -> dict:
                 ref_wave_batch_fn=FX.ref_waveform_batch,
             ).cache()
             pcm.count()  # own job: python-only stage
-            v = rs.violations(clips)
-            v = v.unionByName(U.duplicate_violations(clips, ["clip_id"]))
-            v = v.unionByName(REF.referential_violations(clips, ts))
-            v = v.unionByName(REF.transcript_mismatch_violations(clips, ts))
-            v = v.unionByName(pcm).cache()
+            v = assemble_violations(rs, clips, ts, pcm=pcm).cache()
             n_viol = v.count()
             verd = rs.verdicts_from_violations(clips, v).collect()
             n_rows = sum(r.n_rows for r in verd)

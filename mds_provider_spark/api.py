@@ -9,6 +9,11 @@ Maps the reference's entry points (SURVEY.md §3) onto the engine:
   Database.load_trips(...)                         (mds/db.py)
       -> ValidationRun (plans/runner.py): checkpointed writes + lineage
 
+What a validation consists of is decided once, in
+``assemble_violations``. ``Validator``, ``ValidationRun``, the oracled
+``clips_validation`` query and bench.py all call it, so every entry
+point reports the same violations for the same ruleset and input.
+
 One object, three calls: build rules, validate, inspect.
 """
 
@@ -22,6 +27,38 @@ from mds_provider_spark import rules as R
 from mds_provider_spark.functions import audio
 from mds_provider_spark.operators import referential as REF
 from mds_provider_spark.operators import uniqueness as U
+
+
+def assemble_violations(
+    ruleset: R.RuleSet,
+    clips: DataFrame,
+    transcripts: DataFrame | None = None,
+    pcm: DataFrame | None = None,
+) -> DataFrame:
+    """Every violation of ``ruleset`` over ``clips``, canonical shape.
+
+    Row rules (one codegen projection) + one duplicate check per
+    ``ruleset.unique_keys`` (declared uniqueness is part of the contract;
+    no unique key, no duplicate check) + referential and transcript
+    equality when ``transcripts`` is given + ``pcm``. Every check keys on
+    ``ruleset.key_col``/``ruleset.part_col``. The PCM frame comes from
+    the caller because only the caller knows how audio should cross into
+    Python (rows, parquet files, a cached frame).
+    """
+    key, part = ruleset.key_col, ruleset.part_col
+    v = ruleset.violations(clips)
+    for uk in ruleset.unique_keys:
+        v = v.unionByName(
+            U.duplicate_violations(clips, list(uk.cols), key_col=key, part_col=part)
+        )
+    if transcripts is not None:
+        v = v.unionByName(
+            REF.referential_violations(clips, transcripts, key=key, part_col=part)
+        )
+        v = v.unionByName(
+            REF.transcript_mismatch_violations(clips, transcripts, key=key, part_col=part)
+        )
+    return v if pcm is None else v.unionByName(pcm)
 
 
 @dataclass
@@ -124,20 +161,11 @@ class Validator:
             from mds_provider_spark.operators.diff import enforce_schema
 
             enforce_schema(df, self.expected_schema)
-        v = self.ruleset.violations(df)
-        for uk in self.ruleset.unique_keys:
-            v = v.unionByName(
-                U.duplicate_violations(
-                    df, list(uk.cols),
-                    key_col=self.ruleset.key_col, part_col=self.ruleset.part_col,
-                )
-            )
-        if transcripts is not None:
-            v = v.unionByName(REF.referential_violations(df, transcripts))
-            v = v.unionByName(REF.transcript_mismatch_violations(df, transcripts))
+        rs = self.ruleset
+        pcm = None
         if self.ref_wave_fn is not None:
-            v = v.unionByName(
-                audio.pcm_violations(df, self.ref_wave_fn, self.min_snr_db)
-            )
-        verd = self.ruleset.verdicts_from_violations(df, v)
+            pcm = audio.pcm_violations(df, self.ref_wave_fn, self.min_snr_db,
+                                       key_col=rs.key_col, part_col=rs.part_col)
+        v = assemble_violations(rs, df, transcripts, pcm)
+        verd = rs.verdicts_from_violations(df, v)
         return ValidationResult(violations=v, verdicts=verd)

@@ -35,6 +35,7 @@ math.
 from __future__ import annotations
 
 import functools
+import itertools
 import math
 import struct
 import zlib
@@ -256,14 +257,61 @@ def _content_violations(
 
 
 def _structurally_invalid(cid, sr, dur, codec) -> bool:
-    """Shared skip predicate for BOTH pcm paths ('Same results' contract):
-    rows already caught by not_null/enum/range rules (NULL key, unknown
-    codec, NULL/NaN/non-positive sr or dur) are not content-checked."""
+    """Layered skip predicate of the content checks: rows already caught
+    by not_null/enum/range rules (NULL key, unknown codec, NULL/NaN/
+    non-positive sr or dur) are not content-checked."""
     if cid is None or codec not in DECODERS:
         return True
     if sr is None or dur is None or pd.isna(sr) or pd.isna(dur):
         return True
     return int(sr) <= 0 or int(dur) <= 0
+
+
+def _pcm_frame(
+    rows,
+    ref_wave_fn: RefWaveFn,
+    ref_wave_batch_fn: "RefWaveBatchFn | None",
+    min_snr_db: float,
+) -> pd.DataFrame:
+    """The one PCM row checker behind both strategies: rows of
+    (key, bytes, sr_hz, dur_ms, codec, part) -> bad_pcm violation frame.
+
+    Validation is LAYERED like the reference's (a record failing schema
+    checks is not further content-checked, ``_structurally_invalid``).
+    A NULL ``bytes`` cell is this stage's own ``missing_field:bytes``
+    finding, and undecodable bytes are a ``bad_pcm`` violation, never a
+    crash."""
+    rid = S.rule_id(S.BAD_PCM, "bytes")
+    rids, ids, parts, msgs = [], [], [], []
+
+    def emit(r, c, p, m):
+        rids.append(r); ids.append(c); parts.append(p); msgs.append(m)
+
+    decodable = []
+    for cid, buf, sr, dur, codec, part in rows:
+        if buf is None:
+            emit(S.rule_id(S.MISSING_FIELD, "bytes"), cid, part,
+                 "required field bytes is missing")
+            continue
+        if _structurally_invalid(cid, sr, dur, codec):
+            continue
+        try:
+            dec = decode(codec, bytes(buf))
+        except Exception as exc:  # undecodable bytes ARE a violation
+            emit(rid, cid, part, f"decode failed: {type(exc).__name__}")
+            continue
+        decodable.append((cid, dec, int(sr), int(dur), part))
+    _content_violations(decodable, ref_wave_fn, ref_wave_batch_fn,
+                        min_snr_db, rid, emit)
+    return pd.DataFrame(
+        {
+            "rule_id": pd.array(rids, dtype="string"),
+            "clip_id": pd.array(ids, dtype="string"),
+            "column_name": pd.array(["bytes"] * len(rids), dtype="string"),
+            "message": pd.array(msgs, dtype="string"),
+            "part_id": pd.array(parts, dtype="int32"),
+        }
+    )
 
 
 def pcm_violations(
@@ -276,61 +324,24 @@ def pcm_violations(
 ) -> DataFrame:
     """bad_pcm violations via mapInPandas (Arrow batches, BASELINE.json).
 
-    Column-pruned input (only 5 columns cross the Arrow boundary — never
-    select * before a Python stage). Validation is LAYERED like the
-    reference's (a record failing schema checks is not further
-    content-checked): rows that already violate structural rules — NULL
-    key/bytes/codec, unregistered codec, non-positive duration — are
-    skipped here; those findings belong to not_null/enum/range rules.
+    Column-pruned input (only 6 columns cross the Arrow boundary — never
+    select * before a Python stage); each batch goes through the shared
+    row checker ``_pcm_frame``, which owns the layered skip contract.
 
     This stage also owns the ``missing_field:bytes`` finding: it is the
     ONLY stage that reads the binary column, so the not-null check rides
     along for free and the Catalyst rule projection never scans bytes —
     at 100 TB the audio payload crosses the scan exactly once, here.
     """
-    rid = S.rule_id(S.BAD_PCM, "bytes")
-    rid_null = S.rule_id(S.MISSING_FIELD, "bytes")
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rids, bad_ids, bad_parts, msgs = [], [], [], []
-
-            def emit(r, c, p, m):
-                rids.append(r); bad_ids.append(c); bad_parts.append(p); msgs.append(m)
-
-            decodable = []
-            for cid, buf, sr, dur, codec, part in zip(
-                pdf[key_col], pdf["bytes"], pdf["sr_hz"], pdf["dur_ms"],
-                pdf["codec"], pdf[part_col],
-            ):
-                if buf is None:
-                    emit(rid_null, cid, part, "required field bytes is missing")
-                    continue
-                if _structurally_invalid(cid, sr, dur, codec):
-                    continue
-                try:
-                    dec = decode(codec, bytes(buf))
-                except Exception as exc:  # undecodable bytes ARE a violation
-                    emit(rid, cid, part, f"decode failed: {type(exc).__name__}")
-                    continue
-                decodable.append((cid, dec, int(sr), int(dur), part))
-            _content_violations(decodable, ref_wave_fn, ref_wave_batch_fn,
-                                min_snr_db, rid, emit)
-            yield pd.DataFrame(
-                {
-                    "rule_id": pd.array(rids, dtype="string"),
-                    "clip_id": pd.array(bad_ids, dtype="string"),
-                    "column_name": pd.array(["bytes"] * len(rids), dtype="string"),
-                    "message": pd.array(msgs, dtype="string"),
-                    "part_id": pd.array(bad_parts, dtype="int32"),
-                }
-            )
+            rows = zip(pdf[key_col], pdf["bytes"], pdf["sr_hz"], pdf["dur_ms"],
+                       pdf["codec"], pdf[part_col])
+            yield _pcm_frame(rows, ref_wave_fn, ref_wave_batch_fn, min_snr_db)
 
     pruned = clips.select(key_col, "bytes", "sr_hz", "dur_ms", "codec", part_col)
-    return pruned.mapInPandas(
-        check,
-        "rule_id string, clip_id string, column_name string, message string, part_id int",
-    )
+    return pruned.mapInPandas(check, S.VIOLATIONS_SCHEMA)
 
 
 def pcm_violations_over_files(
@@ -341,6 +352,8 @@ def pcm_violations_over_files(
     batch_size: int = 8192,
     parts: "list[int] | None" = None,
     ref_wave_batch_fn: "RefWaveBatchFn | None" = None,
+    key_col: str = "clip_id",
+    part_col: str = "part_id",
 ) -> DataFrame:
     """File-sliced PCM check: workers read parquet slices DIRECTLY.
 
@@ -350,22 +363,22 @@ def pcm_violations_over_files(
     Petastorm-style alternative is to parallelize over FILES: the task
     rows crossing the boundary are just (path, part_id) strings, and each
     Python worker reads its column-pruned slice with pyarrow at native
-    speed. Same results, no bulk transfer. At cluster scale this is the
-    moral equivalent of a DataSourceV2 scan feeding a native decode
-    kernel; locality is traded away (fine on object storage, where reads
-    are remote for everyone anyway).
+    speed. Same results (same row checker), no bulk transfer. At cluster
+    scale this is the moral equivalent of a DataSourceV2 scan feeding a
+    native decode kernel; locality is traded away (fine on object
+    storage, where reads are remote for everyone anyway).
 
-    Input must be a directory of parquet files partitioned by part_id
-    (the engine's bucket layout, plans/runner.py).
+    Input must be a directory of parquet files partitioned by
+    ``part_col`` (the engine's bucket layout, plans/runner.py).
     """
     import glob
     import re
 
-    files = sorted(glob.glob(f"{clips_dir}/part_id=*/*.parquet"))
+    files = sorted(glob.glob(f"{clips_dir}/{part_col}=*/*.parquet"))
     keep = set(parts) if parts is not None else None
     rows = []
     for f in files:
-        m = re.search(r"part_id=(\d+)", f)
+        m = re.search(rf"{re.escape(part_col)}=(\d+)", f)
         p = int(m.group(1)) if m else 0
         if keep is not None and p not in keep:
             continue  # manual partition pruning of the file list
@@ -373,57 +386,21 @@ def pcm_violations_over_files(
     fdf = spark.createDataFrame(rows, "path string, part_id int").repartition(
         max(len(rows), 1)
     )
-    rid = S.rule_id(S.BAD_PCM, "bytes")
-    rid_null = S.rule_id(S.MISSING_FIELD, "bytes")
+    cols = [key_col, "bytes", "sr_hz", "dur_ms", "codec"]
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq
 
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec"]
         for pdf in batches:
-            rids, ids, parts, msgs = [], [], [], []
-
-            def emit(r, c, p, m):
-                rids.append(r); ids.append(c); parts.append(p); msgs.append(m)
-
             for path, part in zip(pdf["path"], pdf["part_id"]):
                 pf = pq.ParquetFile(path)
                 for rb in pf.iter_batches(batch_size=batch_size, columns=cols):
-                    decodable = []
-                    for cid, buf, sr, dur, codec in zip(
-                        rb.column(0).to_pylist(), rb.column(1).to_pylist(),
-                        rb.column(2).to_pylist(), rb.column(3).to_pylist(),
-                        rb.column(4).to_pylist(),
-                    ):
-                        if buf is None:
-                            emit(rid_null, cid, part,
-                                 "required field bytes is missing")
-                            continue
-                        if _structurally_invalid(cid, sr, dur, codec):
-                            continue
-                        try:
-                            dec = decode(codec, buf)
-                        except Exception as exc:
-                            emit(rid, cid, part,
-                                 f"decode failed: {type(exc).__name__}")
-                            continue
-                        decodable.append((cid, dec, int(sr), int(dur), part))
-                    _content_violations(decodable, ref_wave_fn,
-                                        ref_wave_batch_fn, min_snr_db, rid, emit)
-            yield pd.DataFrame(
-                {
-                    "rule_id": pd.array(rids, dtype="string"),
-                    "clip_id": pd.array(ids, dtype="string"),
-                    "column_name": pd.array(["bytes"] * len(rids), dtype="string"),
-                    "message": pd.array(msgs, dtype="string"),
-                    "part_id": pd.array(parts, dtype="int32"),
-                }
-            )
+                    rows = zip(*(rb.column(c).to_pylist() for c in cols),
+                               itertools.repeat(part))
+                    yield _pcm_frame(rows, ref_wave_fn, ref_wave_batch_fn,
+                                     min_snr_db)
 
-    return fdf.mapInPandas(
-        check,
-        "rule_id string, clip_id string, column_name string, message string, part_id int",
-    )
+    return fdf.mapInPandas(check, S.VIOLATIONS_SCHEMA)
 
 
 def audio_features(clips: DataFrame, key_col: str = "clip_id") -> DataFrame:

@@ -12,15 +12,6 @@ from pyspark.sql import Column, functions as F
 from mds_provider_spark.schema import UUID_RE
 
 
-def ms_to_timestamp(col: Column | str) -> Column:
-    """MDS wire format is integer milliseconds (mds/encoding.py)."""
-    return F.timestamp_millis(F.col(col) if isinstance(col, str) else col)
-
-
-def timestamp_to_ms(col: Column | str) -> Column:
-    return F.unix_millis(F.col(col) if isinstance(col, str) else col)
-
-
 def is_uuid(col: Column | str) -> Column:
     return (F.col(col) if isinstance(col, str) else col).rlike(UUID_RE)
 

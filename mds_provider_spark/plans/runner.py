@@ -12,6 +12,12 @@ computed by the fixture generator here). Consequences:
   * therefore validating part-groups independently and committing each
     group atomically loses nothing — a resumed run skips committed groups
     and every cross-row check still sees all the rows it needs.
+    (A declared unique key that ``part_id`` does not derive from is
+    checked within each group only.)
+
+What a group validates is ``api.assemble_violations`` over the group's
+rows, the same call ``Validator.validate`` makes; the runner only picks
+how PCM crosses into Python (``pcm_strategy``).
 
 Per group the input filter is a partition-pruned scan (``part_id IN
 (...)`` prunes files/Iceberg manifests), the row-rule pass is one codegen
@@ -29,9 +35,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mds_provider_spark import schema as S
+from mds_provider_spark.api import assemble_violations
 from mds_provider_spark.functions import audio
-from mds_provider_spark.operators import referential as REF
-from mds_provider_spark.operators import uniqueness as U
 from mds_provider_spark.plans.checkpoint import CommitLog
 from mds_provider_spark.rules import RuleSet, mds_clip_rules
 
@@ -90,33 +95,26 @@ class ValidationRun:
             for g, i in enumerate(range(0, len(parts), self.group_size))
         ]
 
-    def _cross_row_violations(
-        self, clips: DataFrame, transcripts: DataFrame | None,
-        parts: list[int] | None = None,
-    ) -> DataFrame:
-        """Everything that is NOT the single-pass row-rule projection:
-        duplicates (shuffle), referential/equality (co-partition joins),
-        PCM (Arrow batches). Small output — cached by run()."""
-        v = U.duplicate_violations(clips, ["clip_id"])
-        if transcripts is not None:
-            v = v.unionByName(REF.referential_violations(clips, transcripts))
-            v = v.unionByName(REF.transcript_mismatch_violations(clips, transcripts))
-        if self.ref_wave_fn is not None:
-            if self.pcm_strategy == "files":
-                if not self.clips_path:
-                    raise ValueError("pcm_strategy='files' requires clips_path")
-                pcm = audio.pcm_violations_over_files(
-                    self.spark, self.clips_path, self.ref_wave_fn,
-                    self.min_snr_db, parts=parts,
-                    ref_wave_batch_fn=self.ref_wave_batch_fn,
-                )
-            else:
-                pcm = audio.pcm_violations(
-                    clips, self.ref_wave_fn, self.min_snr_db,
-                    ref_wave_batch_fn=self.ref_wave_batch_fn,
-                )
-            v = v.unionByName(pcm)
-        return v
+    def _pcm_violations(self, clips: DataFrame, parts: list[int]) -> DataFrame | None:
+        """The runner's one validation choice: how PCM crosses into
+        Python (``pcm_strategy``). Everything else is assemble_violations."""
+        if self.ref_wave_fn is None:
+            return None
+        rs = self.ruleset
+        if self.pcm_strategy == "files":
+            if not self.clips_path:
+                raise ValueError("pcm_strategy='files' requires clips_path")
+            return audio.pcm_violations_over_files(
+                self.spark, self.clips_path, self.ref_wave_fn,
+                self.min_snr_db, parts=parts,
+                ref_wave_batch_fn=self.ref_wave_batch_fn,
+                key_col=rs.key_col, part_col=rs.part_col,
+            )
+        return audio.pcm_violations(
+            clips, self.ref_wave_fn, self.min_snr_db,
+            key_col=rs.key_col, part_col=rs.part_col,
+            ref_wave_batch_fn=self.ref_wave_batch_fn,
+        )
 
     def run(
         self,
@@ -145,14 +143,11 @@ class ValidationRun:
             if stop_after_groups is not None and ran >= stop_after_groups:
                 break
             t0 = time.monotonic()
-            sub = clips.where(F.col("part_id").isin(parts))
-            sub_t = (
-                transcripts.where(F.col("part_id").isin(parts))
-                if transcripts is not None
-                else None
-            )
-            viol = self.ruleset.violations(sub).unionByName(
-                self._cross_row_violations(sub, sub_t, parts)
+            in_group = F.col(self.ruleset.part_col).isin(parts)
+            sub = clips.where(in_group)
+            sub_t = transcripts.where(in_group) if transcripts is not None else None
+            viol = assemble_violations(
+                self.ruleset, sub, sub_t, self._pcm_violations(sub, parts)
             )
             # clear the group's partitions first: a crashed attempt may
             # have left rows in a part whose retry writes nothing, and

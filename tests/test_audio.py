@@ -96,10 +96,11 @@ def test_ref_waveform_batch_bit_identical(spark):
         assert np.array_equal(batch[i], FX.ref_waveform(cid, 8000, 120))
 
 
-def test_ref_waveform_memo_bit_identical():
+def test_ref_waveform_memo_bit_identical(monkeypatch):
     """The per-process second-harmonic memo must not change a single bit
     vs synthesizing both harmonics inline (the generator/checker/oracle
-    share this waveform byte-for-byte)."""
+    share this waveform byte-for-byte). Memoized arrays are read-only,
+    and a sweep over large (sr, dur) stays within the byte budget."""
     from mds_provider_spark.sources import fixtures as FX
 
     def ref_inline(clip_id, sr_hz, dur_ms):
@@ -121,6 +122,24 @@ def test_ref_waveform_memo_bit_identical():
         batch = FX.ref_waveform_batch(ids, sr, dur)
         for i, cid in enumerate(ids):
             assert np.array_equal(batch[i], ref_inline(cid, sr, dur))
+
+    memoized = [*FX._T_MEMO.values(), *FX._H2_MEMO.values()]
+    assert memoized and not any(a.flags.writeable for a in memoized)
+    with pytest.raises(ValueError):
+        memoized[0][0] = 1.0
+
+    budget = 2 * 1024 * 1024
+    monkeypatch.setattr(FX, "_T_MEMO", {})
+    monkeypatch.setattr(FX, "_H2_MEMO", {})
+    monkeypatch.setattr(FX, "_memo_bytes", 0)
+    monkeypatch.setattr(FX, "_MEMO_MAX_BYTES", budget)
+    for sr in (8000, 16000, 44100, 48000):
+        for dur in (250, 1000, 3000, 6000):
+            for cid in ids[:4]:
+                assert np.array_equal(FX.ref_waveform(cid, sr, dur),
+                                      ref_inline(cid, sr, dur))
+    held = sum(a.nbytes for a in [*FX._T_MEMO.values(), *FX._H2_MEMO.values()])
+    assert 0 < held == FX._memo_bytes <= budget
 
 
 def test_quality_features_kernel_properties():

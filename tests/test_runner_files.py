@@ -1,8 +1,8 @@
 """File-sliced PCM strategy in the runner must be output-identical to the
-row-based strategy (same checkpointed run, same violations)."""
+row-based strategy (same checkpointed run, same violations), and both to
+the Validator facade over the same input."""
 
-import pyspark.sql.functions as F
-
+from mds_provider_spark.api import Validator
 from mds_provider_spark.plans.runner import ValidationRun
 from mds_provider_spark.sources import fixtures as FX
 
@@ -30,11 +30,16 @@ def test_files_strategy_matches_rows(spark, tmp_path):
     )
     files_run.run(stored, ts)
 
+    facade = Validator.clips(ref_wave_fn=FX.ref_waveform).validate(stored, ts)
+
     key = lambda t: tuple("" if x is None else str(x) for x in t)
     a = sorted(map(tuple, rows_run.violations().collect()), key=key)
     b = sorted(map(tuple, files_run.violations().collect()), key=key)
-    assert a == b and len(a) > 0
+    c = sorted(map(tuple, facade.violations.collect()), key=key)
+    assert a == b == c and len(a) > 0
 
-    va = sorted(map(tuple, rows_run.verdicts().collect()))
-    vb = sorted(map(tuple, files_run.verdicts().collect()))
-    assert va == vb
+    cols = ["part_id", "status", "n_rows", "n_violations"]
+    va = sorted(map(tuple, rows_run.verdicts().select(cols).collect()))
+    vb = sorted(map(tuple, files_run.verdicts().select(cols).collect()))
+    vc = sorted(map(tuple, facade.verdicts.select(cols).collect()))
+    assert va == vb == vc
